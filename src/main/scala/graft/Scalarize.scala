@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   * correctness dump. The gate comparer (pandas) cannot sort/hash ndarray
   * cells, so [[Verify]] flattens every array column to a deterministic
   * string, mirrored exactly by the DuckDB oracle SQL (the `ddIntArr` /
-  * `ddDblArr` / `ddStrArr` / `ddIntArrArr` helpers in [[Queries]]).
+  * `ddDblArr` / `ddStrArr` / `ddIntArrArr` helpers in [[graft.gates.GateSupport]]).
   *
   * Encoding (identical on both engines):
   *   - array<integral|bool>  -> elements cast to string, joined with ','

@@ -28,8 +28,10 @@ object SparkEntry {
     engine(queries)
   }
   /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.Gate.all.map(g => g.name -> g.build).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Queries.oracleSql
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] =
+    gates.Gate.all.map(g => g.name -> g.oracle).toMap
 }

@@ -169,8 +169,8 @@ object DedupOps {
 
   /** [[polySig61]] applied to every element of a string array in ONE
     * codegen pass — bit-identical to `transform(toks, polySig61)`
-    * (parity: SimhashKernelSpec; the HOF form splits each token into
-    * per-char strings and folds them interpreted).
+    * (parity: MinhashExprsSpec "poly61SigArray matches…"; the HOF form
+    * splits each token into per-char strings and folds them interpreted).
     */
   def poly61SigArray(tokens: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
@@ -529,7 +529,8 @@ case class SimHashDedupPipe(
         // three exchanges of the exploded token stream. With the hash
         // codegen'd, hashing per OCCURRENCE is cheaper than shuffling
         // the occurrences (r20 A/B; votes are per occurrence in both
-        // forms, so signatures are bit-identical — SimhashParitySpec).
+        // forms, so signatures are bit-identical — MinhashExprsSpec
+        // "map-only poly61 simhash…").
         df.select(qcol(idCol).cast("long").as("id"),
           DedupOps.simhash64Fold(DedupOps.poly61SigArray(tokArr)).as("sim"))
       } else {

@@ -44,8 +44,8 @@ object SrpLayout {
   val OccupancySlack: Double = 1.25
 
   /** Occupancy presets for [[graft.search.LSHDenseEngine.sized]], from
-    * the measured crossover (tools/LshScale, 200k vectors x 100 queries,
-    * cold: narrow 60/6 3.72 s vs wide 120/6 4.29 s; recall 100/100 at
+    * the measured crossover (the LshScale run in SURVEY.md: 200k vectors
+    * x 100 queries, cold: narrow 60/6 3.72 s vs wide 120/6 4.29 s; recall 100/100 at
     * both): RETRIEVAL candidate volume is LINEAR in occupancy, so a
     * STANDING index — signature build state-cached once, queries
     * amortize it — wants tight buckets (target 1, the default). A

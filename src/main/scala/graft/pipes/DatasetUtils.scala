@@ -95,7 +95,7 @@ object DatasetFingerprint {
     * `Relation [cols] parquet` with no path, so two scans of different
     * directories (sf0.01 vs sf0.1 fixtures) hash EQUAL and a cache keyed
     * on it serves the wrong corpus. Fold in each file-relation leaf's
-    * root paths + total bytes (the same identity [[graft.Queries]]
+    * root paths + total bytes (the same identity [[graft.gates.GateSupport]]
     * tableFp uses) so the key tracks which data the plan reads.
     */
   def of(df: DataFrame): String = {

@@ -269,8 +269,8 @@ object LSHDenseEngine {
     * ([[graft.llm.SrpLayout.StandingOccupancy]]) is right for a
     * STANDING index (signature build state-cached once, queries
     * amortize it). A ONE-SHOT scan pays the signature build every call
-    * and the measured 200k-vector crossover (tools/LshScale) shows the
-    * finer buckets don't repay it — pass
+    * and the measured 200k-vector crossover (the LshScale run in
+    * SURVEY.md) shows the finer buckets don't repay it — pass
     * [[graft.llm.SrpLayout.OneShotRetrievalOccupancy]] there so the
     * auto-sizer doesn't quietly cost one-shot callers the 2x build.
     */

@@ -255,10 +255,10 @@ case class Poly61SigArrayExpr(child: Expression) extends UnaryExpression {
   *     UTF-8 (multi-byte sequences never contain ASCII bytes);
   *   - Java's `\p{Punct}` is exactly the 32 ASCII punctuation chars —
   *     again safe to test per byte;
-  *   - `trim` only strips leading/trailing 0x20: a leading whitespace
-  *     run otherwise yields one "" token via split, which the
-  *     length>0 filter drops — same net result as skipping the run;
-  *     trailing empties are dropped by split itself;
+  *   - `trim` only strips leading/trailing 0x20: a leading or trailing
+  *     whitespace run otherwise yields one "" token via split (which
+  *     keeps trailing empties: limit -1), and the length>0 filter drops
+  *     it — same net result as skipping the run;
   *   - a token that is ALL punctuation strips to "" and is dropped by
   *     the length filter, exactly like the HOF chain;
   *   - NULL text propagates null (null-safe unary).

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class PlanShapeSpec extends SparkSpec {
 
   private def plan(name: String): String =
-    Queries.queries(name)(spark, "/root/testdata/sf0.001")
+    SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan.toString
 
   test("filter pushdown reaches the parquet scan (bm25 queries)") {
@@ -149,7 +149,7 @@ class PlanShapeSpec extends SparkSpec {
     // the hint would be honored regardless of size and OOM at 100 TB; the
     // LOGICAL plan must carry no ResolvedHint — Catalyst may still choose
     // a broadcast join for a small lookup on its own
-    val q = Queries.queries("s4_group_lookup")(spark, "/root/testdata/sf0.001")
+    val q = SparkEntry.queries("s4_group_lookup")(spark, sfDir)
     val logical = q.queryExecution.optimizedPlan.toString
     assert(!logical.contains("ResolvedHint") &&
       !logical.toLowerCase.contains("strategy=broadcast"),

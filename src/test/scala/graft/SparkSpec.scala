@@ -7,6 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
+  /** The directory holding the [[sf]] tables (a gate's `sfDir`). */
+  def sfDir: String = new java.io.File(sf("documents")).getParent
 }
 
 object SparkSpec {

@@ -236,4 +236,16 @@ class RegistrySpec extends SparkSpec {
     assert(CrossCorpusMinHashPipe("t", "id", a, "text", "doc_id").fingerprint ==
       CrossCorpusMinHashPipe("t", "id", b, "text", "doc_id").fingerprint)
   }
+
+  test("DatasetFingerprint: scan paths and RDD leaves key apart, stable within a session") {
+    import spark.implicits._
+    def scan(path: String) = DatasetFingerprint.of(spark.read.parquet(path))
+    val small = sf("documents")
+    val larger = small.replace("sf0.001", "sf0.01")
+    assert(scan(small) == scan(small) && scan(small) != scan(larger))
+    val a = spark.sparkContext.parallelize(Seq(1, 2, 3)).toDF("v")
+    val b = spark.sparkContext.parallelize(Seq(1, 2, 3)).toDF("v")
+    assert(DatasetFingerprint.of(a) == DatasetFingerprint.of(a))
+    assert(DatasetFingerprint.of(a) != DatasetFingerprint.of(b))
+  }
 }

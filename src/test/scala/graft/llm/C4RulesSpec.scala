@@ -133,4 +133,14 @@ class SpanDedupSpec extends SparkSpec {
     }
     assert(out.length == 3)
   }
+
+  test("crawl preset chain is one fused scan: no data shuffle, filters pushed") {
+    val docs = spark.read.parquet(sf("documents"))
+      .withColumn("text", regexp_replace(col("text"), " (fast|data) ", ".\n"))
+    val out = graft.pipes.SequentialPipe(Seq(IntraDocLineDedupPipe("text"),
+      C4CleanPipe("text"), graft.pipes.LambdaPipe(_.filter(col("c4_keep")), "c4_floor"),
+      GopherQualityPipe("text")))(docs).select("doc_id", "text", "n_sentences")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning") && plan.contains("DataFilters"), plan)
+  }
 }

@@ -31,5 +31,10 @@ class ClusterSampleSpec extends SparkSpec {
     assert(out.groupBy("cluster").count().filter(col("count") > 5).count() == 0)
     assert(out.filter(col("cluster") < 0 || col("cluster") > 7).count() == 0)
     assert(out.count() > 0)
+    // the kept set does not depend on the input partitioning
+    val re = ClusterBalancedSamplePipe("embedding", "vec_id", cents, cap = 5)(
+      emb.repartition(11))
+    assert(out.select("vec_id", "cluster").except(re.select("vec_id", "cluster"))
+      .count() == 0)
   }
 }

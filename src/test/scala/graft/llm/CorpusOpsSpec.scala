@@ -38,6 +38,8 @@ class CorpusOpsSpec extends SparkSpec {
       s"not random-like: $monotone/${slots.size} ascending pairs")
     val close = slots.sliding(2).count { case Seq(x, y) => math.abs(y - x) < 1000 }
     assert(close < slots.size / 10, s"locality survives: $close close pairs")
+    // the slot order is a distributed range sort, not a single partition
+    assert(a.queryExecution.executedPlan.toString.contains("rangepartitioning"))
   }
 
   test("corpus stats: exact quantiles on a hand-checked group") {
@@ -95,6 +97,8 @@ class CorpusOpsSpec extends SparkSpec {
     val orig = InterleaveDatasets(Seq(a -> 2.0, b -> 1.0), "id")
       .select("id", "interleave_pos")
     assert(orig.except(re).count() == 0)
+    // a weight past 2e6 would zero the fixed-point inverse: refused
+    intercept[IllegalArgumentException] { InterleaveDatasets(Seq(a -> 3e6), "id") }
   }
 
   test("distinct cardinality: exact value, approx within HLL tolerance") {
@@ -123,5 +127,7 @@ class CorpusOpsSpec extends SparkSpec {
       .filter(abs(col("exact") - col("approx")) > col("exact") * 0.05 + 5)
       .count()
     assert(bad == 0)
+    // the grouped stats aggregate combines map-side first
+    assert(ex.queryExecution.executedPlan.toString.contains("partial_"))
   }
 }

@@ -66,6 +66,11 @@ class CurationSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out(100L) > out(1L) + 0.5,
       s"salad ${out(100L)} vs ordered ${out(1L)}")
+    // real docs: finite non-negative scores, broadcast conditional table
+    val real = BigramLogProbPipe("text", "doc_id")(spark.read.parquet(sf("documents")))
+    assert(real.filter(col("bigram_nll") < 0 || col("bigram_nll").isNull ||
+      isnan(col("bigram_nll"))).count() == 0)
+    assert(real.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
 
   test("temperature mix: heads downsampled toward n^alpha, tail kept whole") {
@@ -88,6 +93,17 @@ class CurationSpec extends SparkSpec {
     val re = TemperatureMixPipe("id", "g", alpha = 0.5)(
       df.toDF("id", "g").repartition(7))
     assert(out.select("id").except(re.select("id")).count() == 0)
+    // real docs: the rate table joins broadcast, and a NULL group is
+    // rate-filtered like any other (an === join would pass it whole)
+    val docs = spark.read.parquet(sf("documents"))
+    assert(TemperatureMixPipe("doc_id", "lang")(docs)
+      .queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    val withNull = docs.select(col("doc_id"),
+      when(col("doc_id") % 3 === 0, lit(null)).otherwise(col("lang")).as("lang"))
+    val nullIn = withNull.filter(col("lang").isNull).count()
+    val nullKept = TemperatureMixPipe("doc_id", "lang")(withNull)
+      .filter(col("lang").isNull).count()
+    assert(nullKept > 0 && nullKept < nullIn, s"$nullKept/$nullIn null rows kept")
   }
 
   test("repetition stats: hand-computed fractions on known texts") {
@@ -114,6 +130,19 @@ class CurationSpec extends SparkSpec {
     val dropped = DecontaminatePipe(eval, "text", "doc_id", ngramSize = 3,
       flagOnly = false)(train)
     assert(dropped.select("doc_id").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("decontaminate on real docs: eval docs flag themselves, eval grams broadcast") {
+    val docs = spark.read.parquet(sf("documents"))
+    val eval = docs.filter(col("doc_id") < 10)
+    val flagged = DecontaminatePipe(eval, "text", "doc_id", 4)(docs)
+    assert(flagged.filter(col("doc_id") < 10 && !col("contaminated")).count() == 0)
+    val nFlag = flagged.filter(col("contaminated")).count()
+    assert(DecontaminatePipe(eval, "text", "doc_id", 4, flagOnly = false)(docs)
+      .count() == docs.count() - nFlag)
+    // the probe side never shuffles on the n-gram: the eval side is broadcast
+    val plan = flagged.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"), plan)
   }
 
   test("pii redaction counts and masks all three default families") {
@@ -206,6 +235,7 @@ class CurationSpec extends SparkSpec {
     val hashed = LineDedupPipe("text", "doc_id", hashKey = true)(docs)
       .select("doc_id", "text", "n_lines_removed")
     assert(exact.exceptAll(hashed).isEmpty && hashed.exceptAll(exact).isEmpty)
+    assert(hashed.queryExecution.executedPlan.toString.contains("xxhash64"))
   }
 
   test("unigram nll: rare tokens score higher; partition-invariant") {
@@ -226,6 +256,10 @@ class CurationSpec extends SparkSpec {
     val b = UnigramLogProbPipe("text", "doc_id")(docs.repartition(17))
       .select("doc_id", "unigram_nll")
     assert(a.except(b).count() == 0)
+    // positive, bounded scores; the vocab probe joins broadcast
+    assert(a.filter(col("unigram_nll") <= 0 || col("unigram_nll").isNull ||
+      col("unigram_nll") > 50).count() == 0)
+    assert(a.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
 
   test("stratified sample: rate bounds, determinism, and group isolation") {
@@ -243,5 +277,18 @@ class CurationSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       StratifiedSamplePipe("doc_id", "lang", Seq("en" -> 1.5))
     }
+    // the realized per-group rate lands near its nominal rate
+    val en = docs.filter(col("lang") === "en")
+    val rEn = StratifiedSamplePipe("doc_id", "lang", Seq("en" -> 0.3), 0.7)(en)
+      .count().toDouble / en.count()
+    assert(rEn > 0.15 && rEn < 0.45, s"en rate $rEn vs nominal 0.3")
+  }
+
+  test("pp_curate_v2 gate on sf0.001: some docs drop, some survive, line dedup bites") {
+    val docs = spark.read.parquet(sf("documents"))
+    val v2 = graft.SparkEntry.queries("pp_curate_v2")(spark, sfDir)
+    val n = v2.count()
+    assert(n > 0 && n < docs.count(), s"$n of ${docs.count()} survive")
+    assert(v2.filter(col("n_lines_removed") > 0).count() > 0)
   }
 }

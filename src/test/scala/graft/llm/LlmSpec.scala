@@ -41,6 +41,12 @@ class LlmSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val found = (0 until 30).count(i => pairs.contains((i.toLong, i + 10000L)))
     assert(found >= 20, s"found only $found/30 planted pairs")
+    // hamming pruning sits below the pair-dedup aggregate
+    val poly = SimHashDedupPipe("text", "doc_id", tokenHash = "poly61")(planted)
+    assert(poly.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+        if a.toString.contains("bit_count") => a
+    }.nonEmpty)
   }
 
   test("simhash keeps null-text docs: null pairs with empty doc at hamming 0") {
@@ -108,6 +114,44 @@ class LlmSpec extends SparkSpec {
     (0 until t by 97).foreach { i =>
       val src = (i.toLong * n / t).toInt
       assert(out(i) == bytes(src), s"position $i should sample source $src")
+    }
+  }
+
+  test("SRP emits exactly the planted pairs; hamming prunes before the vector joins") {
+    val raw = spark.read.parquet(sf("embeddings")).select(col("vec_id"),
+      transform(col("embedding"), _.cast("double")).as("embedding"))
+    val out = SRPCosineDedupPipe("embedding", "vec_id")(raw.unionByName(
+      raw.filter(col("vec_id") < 30).select((col("vec_id") + 10000).as("vec_id"),
+        transform(col("embedding"), (x, i) => x + ((i % 5) - 2) * 0.01).as("embedding"))))
+    assert(out.select("id_a", "id_b").as[(Long, Long)].collect().sorted.toSeq ==
+      (0L until 30L).map(i => (i, i + 10000)))
+    // the bit_count predicate only ever sees signature columns, never v_*
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+    val hamInputs = out.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.toString.contains("bit_count") =>
+        f.children.flatMap(_.output)
+      case j: Join if j.condition.exists(_.toString.contains("bit_count")) =>
+        j.children.flatMap(_.output)
+    }
+    assert(hamInputs.nonEmpty && hamInputs.forall(!_.exists(_.name.startsWith("v_"))))
+  }
+
+  test("narrow scans: line dedup widens round-robin; every pipe is layout-invariant") {
+    type DF = org.apache.spark.sql.DataFrame
+    val docs = spark.read.parquet(sf("documents"))
+    // widen is reserved for expression-heavy kernels: line dedup keeps it,
+    // vocab encode and the resize stub run in place
+    val cases: Seq[(DF => DF, Seq[String], Boolean)] = Seq(
+      (LineDedupPipe("text", "doc_id")(_), Seq("doc_id", "text", "n_lines_removed"), true),
+      (VocabEncodePipe("text", "doc_id", vocabSize = 25)(_), Seq("doc_id", "token_ids", "n_oov"), false),
+      ((df: DF) => ResampleBytesPipe("media", targetBytes = 32)(ToMediaColumnPipe("text")(df)),
+        Seq("doc_id", "resized_meta"), false))
+    cases.foreach { case (f, cols, widens) =>
+      def run(in: DF) = f(in).select(cols.map(col): _*).orderBy("doc_id").collect().toSeq
+      val narrow = docs.coalesce(1)
+      assert(f(narrow).queryExecution.executedPlan.toString
+        .contains("RoundRobinPartitioning") == widens, cols)
+      assert(run(narrow) == run(docs.repartition(8)), cols)
     }
   }
 

@@ -77,6 +77,7 @@ class SelectionSpec extends SparkSpec {
     val scored = HashedLinearScorerPipe("text", w, b)(docs)
     val wrong = scored.filter(col("quality_keep") =!= col("label")).count()
     assert(wrong == 0, s"$wrong of 60 misclassified")
+    assert(w.size == 1024 && !b.isNaN && !b.isInfinite)
   }
 
   test("substring dedup: cross-doc and self-repeat coverage, k=5") {
@@ -226,6 +227,10 @@ class SelectionSpec extends SparkSpec {
     val merges = graft.text.BpeOps.learn(
       Seq((1L, "ab cd")).toDF("doc_id", "text"), "text", numMerges = 50)
     assert(merges.isEmpty) // every adjacent pair occurs once
+    // log-odds training on an empty frame: finite weights, no NPE
+    val (w, b) = HashedLinearScorerPipe.trainLogOdds(
+      empty.withColumn("y", lit(true)), "text", "y", numBuckets = 64)
+    assert(w.size == 64 && !b.isNaN && !b.isInfinite)
   }
 
   test("cross-corpus minhash finds the planted leak with exact jaccard") {
@@ -252,9 +257,13 @@ class SelectionSpec extends SparkSpec {
       .select((col("doc_id") + 200000).as("doc_id"), dropLast(2).as("text"))
       .unionByName(docs.filter(col("doc_id") % 20 === 0)
         .select((col("doc_id") + 300000).as("doc_id"), dropLast(1).as("text")))
-    val inc = IncrementalMinHashDedupPipe("text", "doc_id",
+    val incDf = IncrementalMinHashDedupPipe("text", "doc_id",
       docs, "text", "doc_id", jaccardThreshold = 0.5)(batch)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("j"),
+    // candidates come from band equi-joins only
+    val incPlan = incDf.queryExecution.executedPlan.toString
+    assert(!incPlan.contains("CartesianProduct") &&
+      !incPlan.contains("BroadcastNestedLoopJoin"), incPlan)
+    val inc = incDf.select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("j"),
         col("pair_src"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getString(3))).toSet

@@ -50,7 +50,8 @@ class SrpLayoutSpec extends SparkSpec {
     assert(SrpLayout.bitsPerBand(4096L) == 12)
     assert(SrpLayout.bitsPerBand(4097L) == 12)
     // the one-shot retrieval preset keeps the measured 200k regime
-    // narrow (the LshScale crossover), and still widens eventually
+    // narrow (the 200k LshScale crossover recorded in SURVEY.md), and
+    // still widens eventually
     assert(SrpLayout.forCorpusNarrow(200000L, 6,
       SrpLayout.OneShotRetrievalOccupancy) == SrpLayout.Layout(60, 6, 5))
     assert(SrpLayout.bitsPerBand(200000L,

@@ -45,5 +45,7 @@ class VocabSpec extends SparkSpec {
       .orderBy("doc_id").as[(Long, String, Seq[Long])].head()
     val decoded = row._3.map(i => idToTok(i.toInt)).mkString(" ")
     assert(decoded == row._2.trim.split("\\s+").mkString(" "))
+    // the vocab probe joins broadcast
+    assert(enc.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
   }
 }

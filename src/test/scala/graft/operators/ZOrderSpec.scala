@@ -38,5 +38,10 @@ class ZOrderSpec extends SparkSpec {
     // the naive comparison: range-partition by x alone leaves y global
     val (_, sy) = meanSpreads(grid.repartitionByRange(16, col("x")))
     assert(sy > 24, s"x-only layout should leave y unclustered, got $sy")
+    // on real orders the layout is exactly one range exchange
+    val ord = spark.read.parquet(sf("orders"))
+    val plan = ZOrder.layout(ord, Seq(col("o_custkey") % 256, col("o_orderkey") % 256), 8, 8)
+      .queryExecution.executedPlan.toString.toLowerCase
+    assert("rangepartitioning".r.findAllIn(plan).size == 1, plan)
   }
 }

@@ -36,6 +36,15 @@ class EngineStateSpec extends SparkSpec {
     assert(r3 == r1, "reload must serve persisted stats, not recompute")
   }
 
+  test("BM25 stats persist in memory and disk without a stateDir") {
+    val docs = spark.read.parquet(sf("documents"))
+    val eng = BM25Engine(docs, SearchConfig(k = 5, queryIdCol = Some("qid")),
+      corpusIdxCol = "doc_id", corpusTextCol = "text")
+    val lvl = eng.stats.postings.storageLevel
+    assert(lvl.useMemory && lvl.useDisk, lvl.toString)
+    assert(eng.stats.n == docs.count())
+  }
+
   test("IVF centroids/tagged persist; cold engine skips the KMeans fit") {
     val dir = Files.createTempDirectory("graft-ivf").toString
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -199,6 +208,11 @@ class EngineStateSpec extends SparkSpec {
       .select("qid", "`index.idx`", "`index.score`")
       .collect().map(_.toString).sorted.toSeq
     assert(rB == rBCold, "different fixed books must not share cached codes")
+    // the key is a full-width hex content digest, not a 32-bit hashCode
+    def key(books: Seq[Seq[Seq[Double]]]) =
+      PQDenseEngine(corpus, fixedCodebooks = Some(books)).params("fixedBooks")
+    assert(key(booksA) == key(booksA) && key(booksA) != key(booksB))
+    assert(key(booksA).matches("[0-9a-f]{16}"), key(booksA))
     assert(rA != rB, "sanity: the two codebooks rank differently")
   }
 

@@ -104,6 +104,9 @@ class FilteredSearchSpec extends SparkSpec {
       fixedCentroids = Some(IVFDenseEngine.formulaCentroids(4, 64)))(queries(4))))
     assert(new java.io.File(dir).listFiles().length == afterBuild,
       "memberFilter must not fork the persisted index state")
+    // the predicate reaches the persisted tagged-state scan as a data filter
+    val plan = filtered.queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*label[^\\]]*\\].*"), plan)
     // carryCols DO fork it: the payload lives inside the tagged frame
     val forked = IVFDenseEngine(corpus, nlist = 4, nprobe = 4, cfg,
       fixedCentroids = Some(IVFDenseEngine.formulaCentroids(4, 64)),

@@ -84,5 +84,7 @@ class FusionSpec extends SparkSpec {
       WeightedFusionPipe(Seq(filling), Seq(1.0))
     }
     assert(e2.getMessage.contains("fillMaskedIndices"))
+    // a structurally non-filling re-ranker passes
+    RRFFusionPipe(Seq(TopkEngine()))
   }
 }

@@ -136,6 +136,18 @@ class IVFIncrementalSpec extends SparkSpec {
       .map(_.getSeq[Double](1)).toSeq == cents)
   }
 
+  test("removeVectors fuses the delete into the persisted tagged-state scan") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf-rm-push").toString
+    val base = IVFDenseEngine(corpus(), nlist = 8, nprobe = 3, config = cfg,
+      fixedCentroids = Some(cents), stateDir = Some(dir), corpusFingerprint = "rm-push")
+    base.tagged.count() // persist the state
+    val out = base.removeVectors(col("idx") % 4 === 1, fingerprint = "rm-push-rm")(queries())
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*(Not|NOT)[^\\]]*\\].*"), plan)
+    val idxs = out.select(explode(col("`index.idx`"))).as[Long].collect()
+    assert(idxs.nonEmpty && idxs.forall(_ % 4 != 1))
+  }
+
   test("removeVectors composes with addVectors (add then delete some of both)") {
     val all = corpus()
     val eng = IVFDenseEngine(all.filter(col("idx") % 3 =!= 0), nlist = 8,

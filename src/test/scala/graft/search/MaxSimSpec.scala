@@ -61,5 +61,9 @@ class MaxSimSpec extends SparkSpec {
     // dense top-2 on [1,0]: docs 1 and 3 (dot 1) beat doc 2 (dot -1);
     // maxsim keeps that candidate set and orders 1 (score 2) over 3 (1)
     assert(out.getSeq[Long](0) == Seq(1L, 3L))
+    // scored with nested higher-order functions, no UDF
+    val plan = IndexPipe(Seq(dense, MaxSimEngine(corpus, cfg.copy(k = 2))))(qs)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("BatchEvalPython") && !plan.toLowerCase.contains("scalaudf"))
   }
 }

@@ -42,6 +42,15 @@ class SQSpec extends SparkSpec {
     }
   }
 
+  test("SQ8 plans a broadcast ADC scan and a map-side-combined train aggregate") {
+    val eng = SQDenseEngine(corpus, cfg.copy(k = 5))
+    val search = eng(queries(4)).queryExecution.executedPlan.toString
+    assert(search.contains("BroadcastNestedLoopJoin") &&
+      !search.contains("CartesianProduct"), search)
+    val stats = eng.stats.queryExecution.executedPlan.toString
+    assert(stats.contains("partial_min") || stats.contains("HashAggregate"), stats)
+  }
+
   test("SQ8 recall@10 vs brute force is high on real embeddings") {
     val exact = topIdx(BruteForceDenseEngine(corpus, cfg)(queries(10)))
     val sq = topIdx(SQDenseEngine(corpus, cfg)(queries(10)))

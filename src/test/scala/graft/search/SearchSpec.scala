@@ -342,4 +342,15 @@ class SearchSpec extends SparkSpec {
     val r = AutoSearchEngine("dense", small, cfg)(queries)
     assert(r.select(element_at(col("`index.idx`"), 1)).head().getLong(0) == 9L)
   }
+
+  test("registry opq_ivf_pq with default factory: queries self-match at top 1") {
+    val emb = spark.read.parquet(sf("embeddings"))
+    val eng = AutoSearchEngine("opq_ivf_pq",
+      emb.select(col("vec_id").as("idx"), col("embedding").as("vector")),
+      SearchConfig(k = 3, fillMaskedIndices = false, queryIdCol = Some("qid")))
+    val top1 = eng(emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("query.vector")))
+      .select(col("qid"), element_at(col("`index.idx`"), 1)).as[(Long, Long)].collect()
+    assert(top1.count { case (q, t) => q == t } >= 8, top1.mkString(","))
+  }
 }

@@ -88,6 +88,7 @@ class UpsertStreamSpec extends SparkSpec {
     assert(StreamingUpsert.pointer(spark, s"$dir/t").contains("v0"))
     assert(StreamingUpsert.latest(spark, s"$dir/t").get
       .orderBy("k").collect().toSeq == expected)
+    assert(!new java.io.File(s"$dir/t/._LATEST.tmp").exists())
     // a batch id BEHIND the committed pointer is NOT legitimate replay
     // (foreachBatch only re-delivers the last batch) — it means a fresh
     // checkpoint dir against an existing state dir, where silently
@@ -191,6 +192,10 @@ class UpsertStreamSpec extends SparkSpec {
       Row(2L, "update", "b", "B", 20.0, 21.0),
       Row(3L, "delete", "c", null, 30.0, null),
       Row(5L, "insert", null, "e", null, 50.0)), d)
+    // time travel: both versions stay readable by name
+    assert(StreamingUpsert.versions(spark, s"$dir/t") == Seq("vinit", "v0"))
+    assert(StreamingUpsert.read(spark, s"$dir/t", "vinit").count() == 4)
+    assert(StreamingUpsert.read(spark, s"$dir/t", "v0").count() == 4)
     // same-version diff is empty
     assert(StreamingUpsert.diff(spark, s"$dir/t", "v0", "v0",
       Seq("k")).count() == 0)

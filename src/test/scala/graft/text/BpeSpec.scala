@@ -159,6 +159,11 @@ class BpeSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       TokenizerPipe(maxLength = Some(1), specialTokens = Some((101, 102)))
     }
+    // the smallest legal budget emits exactly [bos, eos] on real docs
+    val two = TokenizerPipe(maxLength = Some(2), specialTokens = Some((101, 102)))(
+      spark.read.parquet(sf("documents")).limit(5))
+      .select("input_ids").as[Seq[Int]].collect()
+    assert(two.nonEmpty && two.forall(_ == Seq(101, 102)))
   }
 
   test("encode matches the scalar oracle and is lossless on real docs") {
@@ -166,8 +171,11 @@ class BpeSpec extends SparkSpec {
       .select("doc_id", "text")
     val merges = BpeOps.learn(docs, "text", numMerges = 8)
     assert(merges.size == 8) // real text has >= 8 frequent pairs
-    val out = BpeEncodePipe("text", merges)(docs)
-      .select("doc_id", "text", "bpe_tokens", "n_bpe_tokens")
+    val encoded = BpeEncodePipe("text", merges)(docs)
+    // map-only: widen's round-robin is allowed, a keyed shuffle is not
+    val plan = encoded.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning") && !plan.contains("rangepartitioning"), plan)
+    val out = encoded.select("doc_id", "text", "bpe_tokens", "n_bpe_tokens")
       .collect()
     out.foreach { r =>
       val expected = scalarEncode(r.getString(1), merges)
